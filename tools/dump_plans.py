@@ -1,14 +1,15 @@
-"""Dump .explain('formatted') for bench queries to plans/r10/.
+"""Dump .explain('formatted') for bench queries to plans/$PLANS_DIR/.
 
 Usage:
   python tools/dump_plans.py before            # all BENCH_QUERIES
   python tools/dump_plans.py after name1 name2 # a subset
 
-Writes plans/r10/<name>_<tag>.txt. Construction-only (no actions except
-what eager entries run at build time), so it is cheap and safe to run
-alongside other work. The prepared scd2_merge_apply entry is built via
-bench's own _prepare_scd2_merge_apply so the dumped plan is the plan
-the bench times.
+Writes plans/$PLANS_DIR/<name>_<tag>.txt ($PLANS_DIR defaults to r11).
+Construction-only (no actions except what eager entries run at build
+time), so it is cheap and safe to run alongside other work. The
+prepared scd2_merge_apply entry is built via bench's own
+_prepare_scd2_merge_apply so the dumped plan is the plan the bench
+times.
 """
 import os
 import sys

@@ -19,9 +19,10 @@ LEAST-recently-green oracles first, so
     must be the alphabetical prefix (the recorded block convention —
     a silent mid-block omission is exactly the r8 bug).
 
-Jump-queue members (entry_queries._R<N>_JUMP_QUEUE, highest N —
-kernel/oracle changed since last green, or new this round) are
-exempt: they re-grade out of turn by design.
+Jump-queue members (entry_queries._JUMP_QUEUE — kernel/oracle changed
+since last green, or new this round) are exempt: they re-grade out of
+turn by design. The window itself is entry_queries._GRADING_WINDOW; a
+rotation edits those two sets and reruns this check.
 
 Mid-cycle note (ADVICE r9): immediately after a round's CORRECTNESS
 artifact lands, the registry still holds the JUST-GRADED window, so
@@ -76,14 +77,7 @@ for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
         if isinstance(row, dict) and row.get("hash_match"):
             fresh[name] = max(fresh.get(name, 0), rnd)
 
-# highest-numbered _R<N>_JUMP_QUEUE is the current round's exemption
-# list (the r9 name stays importable for history; the tool must not
-# pin a round number that every rotation would have to edit here)
-_jq_names = sorted(
-    (n for n in dir(entry_queries) if n.startswith("_R") and n.endswith("_JUMP_QUEUE")),
-    key=lambda n: int(n[2:].split("_")[0]),
-)
-jump = set(getattr(entry_queries, _jq_names[-1], []) if _jq_names else [])
+jump = entry_queries._JUMP_QUEUE
 newest_round = max(fresh.values(), default=0)
 never = [n for n in o if n not in fresh]
 never_out = [n for n in never if n not in w]
