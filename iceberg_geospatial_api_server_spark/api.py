@@ -235,14 +235,15 @@ def query_layer(
             # the pyproj-hub route); raises ValueError on codes with no
             # closed form (the reference rejects unknown EPSG via pyproj
             # the same way)
-            result.features = result.features.withColumn(
-                gcol,
-                G.st_reproject_wkb(qp.out_sr, src_wkid=src_srid)(F.col(gcol)),
+            reproject = G.st_reproject_wkb(qp.out_sr, src_wkid=src_srid)
+            result.transform(
+                lambda d: d.withColumn(gcol, reproject(F.col(gcol)))
             )
             schema = replace(schema, srid=qp.out_sr)
         if qp.max_allowable_offset and qp.max_allowable_offset > 0:
-            result.features = result.features.withColumn(
-                gcol, G.st_simplify(qp.max_allowable_offset)(F.col(gcol))
+            simplify = G.st_simplify(qp.max_allowable_offset)
+            result.transform(
+                lambda d: d.withColumn(gcol, simplify(F.col(gcol)))
             )
 
     if fmt == "pbf":
@@ -272,6 +273,7 @@ def get_tile(
     server can 204 them.
     """
     from iceberg_geospatial_api_server_spark.catalog import feature_schema
+    from iceberg_geospatial_api_server_spark.engine import _INTERNAL_COLS
     from iceberg_geospatial_api_server_spark.serializers.mvt import (
         serialize_tile,
     )
@@ -279,11 +281,8 @@ def get_tile(
     schema = feature_schema(df)
     fields = out_fields
     if fields is None:
-        fields = [
-            f["name"]
-            for f in schema.fields
-            if f["name"] not in (schema.geometry_column, schema.id_field)
-        ][:8]
+        skip = {schema.geometry_column, schema.id_field} | _INTERNAL_COLS
+        fields = [f["name"] for f in schema.fields if f["name"] not in skip][:8]
     id_col = schema.id_field if schema.id_field in df.columns else None
     payload = serialize_tile(
         df,

@@ -11,13 +11,16 @@ cluster the same API is backed by the Iceberg catalog
 
 from __future__ import annotations
 
+import copy
 import os
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from iceberg_geospatial_api_server_spark.util import handle_memo
 
 _VALID_NAME = re.compile(r"^[a-zA-Z_][a-zA-Z0-9_]*$")
 
@@ -260,7 +263,19 @@ def feature_schema(df: DataFrame, table_identifier: str = "table") -> FeatureSch
     Extent/geometry-type detection is lazy (only when a geometry column
     exists) and uses the same adaptive max_record_count policy as the
     reference (engine.py:172-174: 500 for polygons else 10000).
+
+    The layer schema is a per-handle snapshot: the geometry-type sample
+    and the full-layer extent (two Spark jobs) run on the first call for
+    a handle and never again for it, since a handle's rows are fixed.
+    New data means a new handle (``VersionedTable.read()`` after an
+    append), which detects its own schema. Every call returns an
+    independent copy, so callers may mutate what they get.
     """
+    detected = handle_memo(df, "feature_schema", lambda: _detect_schema(df))
+    return replace(copy.deepcopy(detected), table_identifier=table_identifier)
+
+
+def _detect_schema(df: DataFrame) -> FeatureSchema:
     geom_col = detect_geometry_column(df.schema)
     fields = []
     for f in df.schema.fields:
@@ -289,7 +304,7 @@ def feature_schema(df: DataFrame, table_identifier: str = "table") -> FeatureSch
         max_records = 500 if geometry_type in ("Polygon", "MultiPolygon") else 10000
 
     return FeatureSchema(
-        table_identifier=table_identifier,
+        table_identifier="table",
         geometry_column=geom_col,
         geometry_type=geometry_type,
         fields=fields,

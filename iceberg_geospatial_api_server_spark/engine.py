@@ -24,6 +24,7 @@ from iceberg_geospatial_api_server_spark.catalog import detect_geometry_column
 from iceberg_geospatial_api_server_spark.geo import functions as G
 from iceberg_geospatial_api_server_spark.geo import wkb as W
 from iceberg_geospatial_api_server_spark.models import QueryParams, QueryResult
+from iceberg_geospatial_api_server_spark.util import handle_memo
 
 # WHERE sanitization. The reference blocklists keywords
 # (engine.py:33-45, 539-563) against DuckDB; compiling client text with
@@ -231,12 +232,14 @@ def with_oid(df: DataFrame, order_cols: list[str] | None = None) -> DataFrame:
     if "__oid" in df.columns:
         return df
     order_cols = order_cols or _default_oid_order(df)
-    # cache keyed by the ordering — OIDs from different order_cols on the
+    # memo keyed by the ordering — OIDs from different order_cols on the
     # same frame must never alias each other
-    cache_key = tuple(order_cols)
-    cached = getattr(df, "_sg_oid_cache", None)
-    if cached is not None and cache_key in cached:
-        return cached[cache_key]
+    return handle_memo(
+        df, ("oid", tuple(order_cols)), lambda: _rank_oids(df, order_cols)
+    )
+
+
+def _rank_oids(df: DataFrame, order_cols: list[str]) -> DataFrame:
     key0 = order_cols[0]
     key0_type = df.schema[key0].dataType.typeName()
     numeric = key0_type in {
@@ -255,13 +258,9 @@ def with_oid(df: DataFrame, order_cols: list[str] | None = None) -> DataFrame:
         key_cmp = F.col(key0)
         if cuts is None:  # frame too small to sample — one sort fits
             w = Window.orderBy(*sort_exprs)
-            out = df.withColumn(
+            return df.withColumn(
                 "__oid", (F.row_number().over(w) - 1).cast("int")
             )
-            if not hasattr(df, "_sg_oid_cache"):
-                df._sg_oid_cache = {}
-            df._sg_oid_cache[cache_key] = out
-            return out
 
     if cuts:
         cut_arr = F.array(*[F.lit(c) for c in cuts])
@@ -285,7 +284,7 @@ def with_oid(df: DataFrame, order_cols: list[str] | None = None) -> DataFrame:
     )
 
     w = Window.partitionBy("__bkt").orderBy(*sort_exprs)
-    out = (
+    return (
         tagged.withColumn(
             "__oid",
             (
@@ -296,10 +295,6 @@ def with_oid(df: DataFrame, order_cols: list[str] | None = None) -> DataFrame:
         )
         .drop("__bkt")
     )
-    if not hasattr(df, "_sg_oid_cache"):
-        df._sg_oid_cache = {}
-    df._sg_oid_cache[cache_key] = out
-    return out
 
 
 def _build_select(df: DataFrame, params: QueryParams, geom_col: str | None) -> list[str]:
@@ -327,6 +322,14 @@ def query_features(
     attribute and bbox predicates into the parquet scan when __bbox_* are
     persisted, and the WKB exact predicate (pandas UDF) only runs on rows
     that survive the numeric pre-filters.
+
+    One Spark action per response: on a warm handle (``__oid``
+    persisted, or ranked once and kept on the handle by `with_oid`)
+    building a page, id list or objectIds fetch runs no job. The result
+    is lazy and its serializer collects it once (`QueryResult.collect`),
+    which also yields ``count`` and ``exceededTransferLimit`` — no
+    COUNT job. returnCountOnly and returnExtentOnly run their one
+    aggregate here.
     """
     geom_col = geom_col or detect_geometry_column(df.schema)
     numbered = with_oid(df, oid_order)
@@ -440,18 +443,13 @@ def query_features(
     # ids-only (engine.py:389-398)
     if params.return_ids_only:
         ids = filtered.select("__oid").orderBy("__oid")
-        return QueryResult(features=ids, geometry_column=geom_col, count=ids.count())
+        return QueryResult(features=ids, geometry_column=geom_col)
 
     # objectIds fetch (engine.py:400-416)
     if params.object_ids is not None:
         out = numbered.filter(F.col("__oid").isin([int(i) for i in params.object_ids]))
         out = out.select(*_build_select(out, params, geom_col))
-        return QueryResult(
-            features=out,
-            geometry_column=geom_col,
-            count=out.count(),
-            exceeded_transfer_limit=False,
-        )
+        return QueryResult(features=out, geometry_column=geom_col)
 
     # order / pagination (engine.py:418-438). __oid is always appended as a
     # tiebreaker so pagination windows are deterministic under ties (the
@@ -463,23 +461,17 @@ def query_features(
     offset = params.offset or 0
     if offset:
         out = out.offset(offset)
-    if params.limit:
-        out = out.limit(int(params.limit))
+    cols = _build_select(out, params, geom_col)
+    if not params.limit:
+        return QueryResult(features=out.select(*cols), geometry_column=geom_col)
 
-    out = out.select(*_build_select(out, params, geom_col))
-
-    # exceededTransferLimit (engine.py:448-456)
-    exceeded = False
-    n = out.count()
-    if params.limit:
-        total = filtered.count()
-        exceeded = total > offset + int(params.limit)
-
+    # exceededTransferLimit (engine.py:448-456): the probe holds one row
+    # past the page; whether it comes back is the answer
+    limit = int(params.limit)
+    page = out.limit(limit).select(*cols)
+    probe = out.limit(limit + 1).select(*cols)
     return QueryResult(
-        features=out,
-        geometry_column=geom_col,
-        count=n,
-        exceeded_transfer_limit=exceeded,
+        features=page, geometry_column=geom_col, probe=probe, page_limit=limit
     )
 
 

@@ -315,7 +315,9 @@ def clip_features(
 
     Plan: the JVM bbox pre-filter on __bbox_* columns runs before the
     Arrow-batched clip UDF, so Python sees only intersecting candidates;
-    no shuffle anywhere.
+    no shuffle anywhere. Persisted __bbox_* columns are used as they are
+    (no WKB decode for the pre-filter); they describe the unclipped
+    geometry, so they are dropped from the output either way.
     """
     from iceberg_geospatial_api_server_spark.geo.functions import (
         bbox_intersects,
@@ -347,7 +349,9 @@ def clip_features(
             out["clip_ymax"].append(bx[3])
         return pd.DataFrame(out)
 
-    pre = with_bbox(df, geom_col).filter(bbox_intersects(xmin, ymin, xmax, ymax))
+    if "__bbox_xmin" not in df.columns:
+        df = with_bbox(df, geom_col)
+    pre = df.filter(bbox_intersects(xmin, ymin, xmax, ymax))
     clipped = pre.withColumn("__clip", _clip(F.col(geom_col)))
     return (
         clipped.filter(F.col("__clip.geometry").isNotNull())

@@ -1,5 +1,5 @@
-"""Query parameter / result models (ref ``query/models.py``), as plain
-dataclasses — API-agnostic query semantics, not wire formats."""
+"""Query parameter / result models (ref ``query/models.py``) —
+API-agnostic query semantics, not wire formats."""
 
 from __future__ import annotations
 
@@ -48,17 +48,73 @@ class QueryParams:
     max_allowable_offset: Optional[float] = None
 
 
-@dataclass
 class QueryResult:
-    """Ref query/models.py:48-60 — features as a (lazy) DataFrame here."""
+    """Ref query/models.py:48-60 — features as a (lazy) DataFrame here.
 
-    features: Optional[DataFrame] = None
-    geometry_column: str = "geometry"
-    count: int = 0
-    exceeded_transfer_limit: bool = False
-    # filled only for returnExtentOnly: {xmin, ymin, xmax, ymax} or None
-    # when the filtered set is empty
-    extent: Optional[dict] = None
+    ``features`` is the exact page. A bounded page (``page_limit`` set)
+    also carries ``probe``: the same ordered rows and columns with room
+    for one more. A serializer calls `collect`, which reads the probe in
+    ONE job, trims it to the page and learns ``count`` and
+    ``exceeded_transfer_limit`` from it — no separate COUNT job. A
+    caller that reads ``count`` or ``exceeded_transfer_limit`` without
+    collecting pays at most one job (a count over the probe), once.
+    Reshape the rows with `transform` so page and probe stay in step.
+    """
+
+    def __init__(
+        self,
+        features: Optional[DataFrame] = None,
+        geometry_column: str = "geometry",
+        count: Optional[int] = None,
+        exceeded_transfer_limit: Optional[bool] = None,
+        # filled only for returnExtentOnly: {xmin, ymin, xmax, ymax} or
+        # None when the filtered set is empty
+        extent: Optional[dict] = None,
+        probe: Optional[DataFrame] = None,
+        page_limit: Optional[int] = None,
+    ):
+        self.features = features
+        self.geometry_column = geometry_column
+        self.extent = extent
+        self.probe = features if probe is None else probe
+        self.page_limit = page_limit
+        self._count = 0 if count is None and features is None else count
+        if exceeded_transfer_limit is None and page_limit is None:
+            exceeded_transfer_limit = False
+        self._exceeded = exceeded_transfer_limit
+
+    @property
+    def count(self) -> int:
+        if self._count is None:
+            self._resolve(self.probe.count())
+        return self._count
+
+    @property
+    def exceeded_transfer_limit(self) -> bool:
+        if self._exceeded is None:
+            self._resolve(self.probe.count())
+        return self._exceeded
+
+    def _resolve(self, n_probe: int) -> None:
+        if self.page_limit is not None:
+            self._exceeded = n_probe > self.page_limit
+            n_probe = min(n_probe, self.page_limit)
+        self._count = n_probe
+
+    def transform(self, fn) -> None:
+        """Apply a row-preserving reshaping (``DataFrame -> DataFrame``)
+        to the page and its probe alike."""
+        same = self.probe is self.features
+        self.features = fn(self.features)
+        self.probe = self.features if same else fn(self.probe)
+
+    def collect(self, project=None) -> list:
+        """The page's rows in order, ``project(frame)`` applied first:
+        one job over the probe, trimmed to ``page_limit``."""
+        frame = self.probe if project is None else project(self.probe)
+        rows = frame.collect()
+        self._resolve(len(rows))
+        return rows[: self.page_limit] if self.page_limit is not None else rows
 
     @classmethod
     def empty(cls) -> "QueryResult":

@@ -106,7 +106,7 @@ def serialize(result: QueryResult, schema: FeatureSchema) -> dict:
 
     cols = result.features.columns
     if cols == ["__oid"]:
-        oids = [r[0] for r in result.features.collect()]
+        oids = [r[0] for r in result.collect()]
         return {"objectIdFieldName": "__oid", "objectIds": oids}
 
     geom_col = result.geometry_column
@@ -114,17 +114,19 @@ def serialize(result: QueryResult, schema: FeatureSchema) -> dict:
     if has_geom:
         feats = [
             json.loads(r[0])
-            for r in feature_lines(result.features, geom_col).collect()
+            for r in result.collect(lambda df: feature_lines(df, geom_col))
         ]
     else:
         feats = [
             {"attributes": json.loads(r[0]), "geometry": None}
-            for r in result.features.select(
-                F.to_json(
-                    F.struct(*[F.col(c) for c in cols]),
-                    {"ignoreNullFields": "false"},
+            for r in result.collect(
+                lambda df: df.select(
+                    F.to_json(
+                        F.struct(*[F.col(c) for c in cols]),
+                        {"ignoreNullFields": "false"},
+                    )
                 )
-            ).collect()
+            )
         ]
 
     fields = [

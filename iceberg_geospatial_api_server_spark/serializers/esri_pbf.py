@@ -223,7 +223,7 @@ def serialize(
 
     cols = result.features.columns
     if cols == ["__oid"]:
-        oids = [int(r[0]) for r in result.features.collect()]
+        oids = [int(r[0]) for r in result.collect()]
         ids_result = ld(1, b"__oid") + packed_varints(3, oids)
         return ld(1, b"") + ld(2, ld(3, ids_result))
 
@@ -231,8 +231,10 @@ def serialize(
     if max_allowable_offset and geom_col:
         from iceberg_geospatial_api_server_spark.geo.functions import st_simplify
 
-        result.features = result.features.withColumn(
-            geom_col, st_simplify(max_allowable_offset)(F.col(geom_col))
+        result.transform(
+            lambda df: df.withColumn(
+                geom_col, st_simplify(max_allowable_offset)(F.col(geom_col))
+            )
         )
 
     type_by_name = {f["name"]: f["type"] for f in schema.fields}
@@ -243,7 +245,7 @@ def serialize(
     inputs = [F.col(c) for c, _ in attr_cols]
     if geom_col:
         inputs.append(F.col(geom_col))
-    frags = result.features.select(kernel(*inputs).alias("f")).collect()
+    frags = result.collect(lambda df: df.select(kernel(*inputs).alias("f")))
 
     fr = ld(1, b"__oid")  # objectIdFieldName
     fr += vi(7, GEOM_TYPE_CODES.get(schema.geometry_type, 3))

@@ -49,8 +49,8 @@ def serialize(result: QueryResult) -> dict:
     fragments; for HTTP streaming use `stream()` instead)."""
     if result.features is None:
         return {"type": "FeatureCollection", "features": []}
-    lines = feature_lines(result.features, result.geometry_column)
-    feats = [json.loads(r[0]) for r in lines.collect()]
+    rows = result.collect(lambda df: feature_lines(df, result.geometry_column))
+    feats = [json.loads(r[0]) for r in rows]
     return {"type": "FeatureCollection", "features": feats}
 
 

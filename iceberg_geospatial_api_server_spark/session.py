@@ -23,6 +23,17 @@ _ICEBERG_CONFS = {
 }
 
 
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """Driver heap for ``local[N]``: half of physical RAM, 1g to 32g.
+    Every executor thread lives in the driver JVM, whose 1g default
+    means constant GC; but a heap larger than the host lets the JVM
+    grow until it is OOM-killed. The other half is left to the JVM's
+    off-heap memory and the Python workers."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(32, int(phys_bytes // 2**31)))}g"
+
+
 def get_spark(
     app_name: str = "iceberg-geospatial-api-server-spark",
     master: str | None = None,
@@ -45,12 +56,11 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        # --- memory: local[N] runs every executor thread inside the
-        # driver JVM, whose 1g default heap means constant GC with 32
-        # threads; size it to the machine (cluster deploys override) ---
+        # --- memory: sized to the host unless SPARK_GRAFT_DRIVER_MEM
+        # says otherwise (cluster deploys override) ---
         .config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
         )
         # --- planner/runtime ---
         .config("spark.sql.adaptive.enabled", "true")

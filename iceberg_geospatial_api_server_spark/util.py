@@ -52,6 +52,24 @@ def multiset_equal_guard(
     )
 
 
+def handle_memo(df: DataFrame, key, build):
+    """``build()``, computed once per DataFrame handle and key.
+
+    A handle is a snapshot: its files and rows are fixed, and new data
+    arrives as a new handle (``VersionedTable.read()`` after an append
+    returns one). Anything derived from a handle's rows (OID cut
+    points, the layer schema's geometry type and extent) can therefore
+    live on the handle and die with it. Callers that hand out mutable
+    values copy them. Two threads' first calls may both build; ``build``
+    is deterministic over the snapshot, so either result serves."""
+    memo = getattr(df, "_sg_memo", None)
+    if memo is None:
+        memo = df._sg_memo = {}
+    if key not in memo:
+        memo[key] = build()
+    return memo[key]
+
+
 def epoch_of(df: DataFrame, col: str = "ts"):
     """Epoch extractor that works for TIMESTAMP and TIMESTAMP_NTZ columns.
 

@@ -201,6 +201,34 @@ def test_get_tile_api_route(spark):
     assert empty == b""
 
 
+def test_get_tile_on_persisted_bbox_layer(spark, sf_dir):
+    """A layer with persisted __bbox_* columns serves tiles: the default
+    fields leave out the internal columns (the clip drops them), and the
+    clip's pre-filter reads the persisted envelope. The tile holds the
+    same features as the same layer with its __bbox_* decoded on the
+    fly."""
+    from iceberg_geospatial_api_server_spark.api import get_tile
+    from iceberg_geospatial_api_server_spark.geo.functions import BBOX_COLS
+    from iceberg_geospatial_api_server_spark.sources.geo_layer import (
+        lineitem_bbox_layer,
+    )
+
+    df = lineitem_bbox_layer(spark, sf_dir)
+    assert set(BBOX_COLS) <= set(df.columns)
+
+    def features(layer_df):
+        payload, _ = get_tile(layer_df, 2, 1, 1)
+        layer = decode_tile(payload)[0]
+        assert not any(k.startswith("__") for k in layer["keys"])
+        return layer["keys"], sorted(
+            (f["id"], tuple(f["paths"][0][0])) for f in layer["features"]
+        )
+
+    keys, got = features(df)
+    assert keys and got
+    assert (keys, got) == features(df.drop(*BBOX_COLS))
+
+
 def test_render_tiles_matches_serialize_tile(spark):
     """One-pass pre-rendering must produce byte-identical tiles to the
     per-request path, cover exactly the occupied tiles, and clip
